@@ -419,9 +419,10 @@ object Queries8 {
           "text", seeds = 8, bands = 4, rowsPerBand = 2, minJaccard = 0.4)
         // round 20 (guide §2.6): the component clustering and the rank
         // iterations are INDEPENDENT chains over the same pinned edge
-        // frame — each is a sequence of small pin/broadcast jobs
-        // (measured: 81 sequential jobs, ~40–180 ms each, at sf0.1), so
-        // overlapping them hides the shorter chain entirely. Results
+        // frame — each is a sequence of small pin jobs (measured at
+        // sf0.01, local[4]: connectedComponents 11 jobs; pageRank 18 —
+        // edge pin 4, node table 2, round one 2, later rounds 5 each),
+        // so overlapping them hides the shorter chain entirely. Results
         // are byte-identical to the sequential form (no shared state).
         val (comp, pr) = graft.operators.Overlap.par2(
           () => Dedup.connectedComponents(near, "id_a", "id_b"),

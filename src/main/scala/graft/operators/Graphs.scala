@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Iterative rank propagation over distributed edge lists — the graph
@@ -51,18 +52,29 @@ object Graphs {
     * half-boundaries.
     *
     * Scale shape: the edge set is normalized once (one groupBy to fold
-    * parallel edges + one to attach out-weight shares, both map-side
-    * combined) and pinned; each iteration is ONE equi-join of ranks to
-    * edges on `src` and ONE hash aggregation on `dst` — the same
-    * shuffle key every round, so a cluster deployment that
-    * pre-partitions `ew` by `src` pays no edge shuffle after round
-    * one. `n` and the dangling mass ride as broadcast one-row
-    * aggregates (never a driver collect), and every round is pinned
-    * via [[Checkpoints.pin]] (lineage truncation + reliable-checkpoint
+    * parallel edges, one `sum over (partition by src)` window for the
+    * out-weight shares) and pinned with each edge's `dst` dangling flag;
+    * the node table is ONE groupBy over the edge endpoints' src/dst
+    * flags. Each iteration is then only edge-sized work: ONE equi-join
+    * of ranks to edges on `src` and ONE hash aggregation on `dst` — the
+    * same shuffle key every round, so a cluster deployment that
+    * pre-partitions `ew` by `src` pays no edge shuffle after round one
+    * (round one joins nothing: every rank is `rank0`). The scalars `n`
+    * and each round's dangling-rank sum are observed on the pins' own
+    * actions ([[org.apache.spark.sql.Observation]] metrics, no extra
+    * job) and enter the next round as literals, computed on the driver
+    * with exact (`Math.*Exact`) long arithmetic. A node without
+    * in-edges receives no contribution, so its rank is the round's
+    * constant `base_n + (2*num*dang_n + den) DIV (2*den)`: the rank
+    * frame holds only nodes with in-edges, and those constant nodes
+    * join the output once, at the end. Every round is pinned via
+    * [[Checkpoints.pin]] (lineage truncation + reliable-checkpoint
     * durability on clusters) with the previous pin released — bounded
     * storage across iterations, the [[Similarity.kmeansGrouped]]
     * contract. Overflow headroom: `rank_n ≤ Scale`, `ratio_n ≤ Scale`,
     * so the contribution product is ≤ 1e18 < 2^63.
+    *
+    * An empty edge list yields an empty `(node, rank)` frame.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weightCol: String, iters: Int,
@@ -70,60 +82,102 @@ object Graphs {
     require(iters >= 1, "iters must be >= 1")
     require(dampNum > 0 && dampDen > dampNum,
       "damping num/den must satisfy 0 < num < den")
+    import Math.{addExact, multiplyExact}
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("double").as("w"))
       .groupBy(col("src"), col("dst"))
       .agg(decSum(col("w")).as("w"))
-    val outW = e0.groupBy(col("src")).agg(decSum(col("w")).as("_W"))
-    // out-weight shares in nanos, fixed for the whole run: pin once
-    val ew = Checkpoints.pin(e0.join(outW, "src")
+    // out-weight shares in nanos (_W: decSum's exact sum, per src) and
+    // the dst's dangling flag, both fixed for the whole run: pin once.
+    // The flag needs no second pass over `edges`: every folded edge
+    // becomes its src's out-row and its dst's in-row, a window over the
+    // row's node tells whether that node has out-edges, and the in-rows
+    // are kept
+    val ew = Checkpoints.pin(e0
+      .withColumn("_W", sum(col("w").cast("decimal(27,12)"))
+        .over(Window.partitionBy("src")).cast("double"))
       .select(col("src"), col("dst"),
         round(lit(Scale.toDouble) * col("w") / col("_W"), 0)
-          .cast("long").as("ratio_n")))
-    // round 20 (guide §1.2 — don't recompute static facts per round):
-    // "has out-edges" is a property of the FIXED edge set, so the
-    // dangling flag is stamped onto the pinned node frame once; each
-    // iteration's dangling-mass aggregate is then a filter over the
-    // ranks frame instead of a fresh left-anti join against a
-    // re-distinct'd edge projection (one broadcast sub-job + one join
-    // per iteration, gone)
-    val nodes = Checkpoints.pin(
-      ew.select(col("src").as("node"))
-        .union(ew.select(col("dst").as("node"))).distinct()
-        .join(ew.select(col("src").as("node")).distinct()
-          .withColumn("_has_out", lit(1)), Seq("node"), "left")
-        .select(col("node"), col("_has_out").isNull.as("_dang")))
-    val nn = broadcast(nodes.agg(count(lit(1)).as("_nl")))
-    val halfUpByN = s"(2 * _s + _nl) DIV (2 * _nl)"
-    var ranks = Checkpoints.pin(nodes.crossJoin(nn)
-      .select(col("node"),
-        expr(s"(2 * ${Scale}L + _nl) DIV (2 * _nl)").as("rank_n"),
-        col("_nl"), col("_dang")))
-    for (_ <- 0 until iters) {
-      // dangling nodes = no out-edges; their whole mass teleports
-      val dang = broadcast(ranks // ranks carries _nl on every row
-        .filter(col("_dang"))
-        .agg(sum(col("rank_n")).as("_s"), first(col("_nl")).as("_nl"))
-        .select(coalesce(expr(halfUpByN), lit(0L)).as("_dm")))
-      val contrib = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst"),
-          expr(s"(rank_n * ratio_n + ${Scale / 2}L) DIV ${Scale}L").as("_c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("_c")).as("_s"))
-      val next = Checkpoints.pin(nodes.crossJoin(nn)
-        .join(contrib, nodes("node") === contrib("dst"), "left")
-        .crossJoin(dang)
+          .cast("long").as("ratio_n"),
+        explode(array(lit(true), lit(false))).as("_out_row"))
+      .withColumn("_has_out", max(col("_out_row")).over(Window.partitionBy(
+        when(col("_out_row"), col("src")).otherwise(col("dst")))))
+      .filter(!col("_out_row"))
+      .select(col("src"), col("dst"), col("ratio_n"),
+        (!col("_has_out")).as("_dang")))
+    // node table: one groupBy over endpoint flags. Only the nodes
+    // without in-edges are kept (they carry the per-round constant);
+    // the counts over ALL nodes ride the pin's own action
+    val nodeObs = Observation()
+    val noIn = Checkpoints.pin(ew
+      .select(explode(array(
+        struct(col("src").as("node"), lit(true).as("out"),
+          lit(false).as("in")),
+        struct(col("dst").as("node"), lit(false).as("out"),
+          lit(true).as("in")))).as("_e"))
+      .groupBy(col("_e.node").as("node"))
+      .agg(max(col("_e.out")).as("_has_out"), max(col("_e.in")).as("_has_in"))
+      .observe(nodeObs, count(lit(1)).as("n"),
+        count(when(!col("_has_out"), 1)).as("nd"))
+      .filter(!col("_has_in"))
+      .select(col("node")))
+    val n = nodeObs.get("n").asInstanceOf[Long]
+    if (n == 0L) {
+      Checkpoints.release(ew)
+      return noIn.select(col("node"), lit(0.0).as("rank"))
+    }
+    val nDang = nodeObs.get("nd").asInstanceOf[Long]
+    val num = dampNum.toLong
+    val den = dampDen.toLong
+    val rank0 = addExact(2 * Scale, n) / multiplyExact(2L, n)
+    val base = addExact(multiplyExact(2 * (den - num), Scale),
+      multiplyExact(den, n)) / multiplyExact(2 * den, n)
+    // dangling nodes = no out-edges; their whole mass teleports
+    def dangMass(dangSum: Long): Long =
+      if (nDang == 0L) 0L
+      else addExact(multiplyExact(2L, dangSum), n) / multiplyExact(2L, n)
+    // rank of a node without in-edges, given the round's dangling mass
+    def constRank(dm: Long): Long =
+      addExact(base, addExact(multiplyExact(2 * num, dm), den) / (2 * den))
+    def share(rank: String): Column =
+      expr(s"($rank * ratio_n + ${Scale / 2}L) DIV ${Scale}L").as("_c")
+    // one round: sum the shares per dst into the ranks of the nodes WITH
+    // in-edges, pin, and observe the new dangling-rank sum
+    def step(contrib: DataFrame, dm: Long): (DataFrame, Long) = {
+      val obs = Observation()
+      val next = Checkpoints.pin(contrib
+        .groupBy(col("dst").as("node"))
+        .agg(sum(col("_c")).as("_s"), max(col("_dang")).as("_dang"))
         .select(col("node"),
-          expr(s"""(2 * ${dampDen - dampNum} * ${Scale}L + $dampDen * _nl)
-                     DIV (2 * $dampDen * _nl)
-                   + (2 * $dampNum * (coalesce(_s, 0L) + _dm) + $dampDen)
-                     DIV (2 * $dampDen)""").as("rank_n"),
-          col("_nl"), col("_dang")))
+          expr(s"${base}L + (2 * $num * (_s + ${dm}L) + $den) DIV (2 * $den)")
+            .as("rank_n"),
+          col("_dang"))
+        .observe(obs, coalesce(sum(when(col("_dang"), col("rank_n"))), lit(0L))
+          .as("dang")))
+      (next, obs.get("dang").asInstanceOf[Long])
+    }
+
+    // round one joins nothing: every rank is rank0
+    var dm = dangMass(multiplyExact(nDang, rank0))
+    var (ranks, dangSum) =
+      step(ew.select(col("dst"), col("_dang"), share(s"${rank0}L")), dm)
+    for (_ <- 1 until iters) {
+      val prevConst = constRank(dm)
+      dm = dangMass(dangSum)
+      val (next, nextDangSum) = step(ew
+        .join(ranks.select(col("node").as("src"), col("rank_n")),
+          Seq("src"), "left")
+        .select(col("dst"), col("_dang"),
+          share(s"coalesce(rank_n, ${prevConst}L)")), dm)
       Checkpoints.release(ranks)
       ranks = next
+      dangSum = nextDangSum
     }
-    ranks.select(col("node"),
-      (col("rank_n").cast("double") / lit(Scale.toDouble)).as("rank"))
+    Checkpoints.release(ew)
+    ranks.select(col("node"), col("rank_n"))
+      .unionByName(noIn.select(col("node"), lit(constRank(dm)).as("rank_n")))
+      .select(col("node"),
+        (col("rank_n").cast("double") / lit(Scale.toDouble)).as("rank"))
   }
 
   /** Exact, order-free sum: DECIMAL(27,12) accumulate, DOUBLE out. */

@@ -12,16 +12,26 @@ package graft.operators
   * pins its own rounds), so the pair of results is byte-identical to
   * the sequential composition.
   *
-  * Failure contract (the [[graft.operators]] fan-out discipline, same
-  * as `Similarity.unionSlices`): both thunks tag their jobs with one
-  * job group; if either fails, the group is cancelled so the surviving
-  * chain does not keep burning the cluster, and the original failure
-  * rethrows. Pins already materialized by the failed query are
-  * reclaimed by the session's ContextCleaner
-  * (`spark.cleaner.referenceTracking.cleanCheckpoints`), exactly as
-  * they would be if the same failure hit the sequential form.
+  * Failure contract (the [[graft.operators]] fan-out discipline, as
+  * in `Similarity.unionSlices`): both thunks tag their jobs with one
+  * job group; if either fails, the group is cancelled TOGETHER WITH its
+  * future jobs, so the surviving chain can neither keep a running job
+  * nor start a new one, and `par2` waits (at most [[SiblingWait]]) for
+  * that chain to unwind before the original failure rethrows — no job
+  * of the group starts after `par2` has thrown. Pins already
+  * materialized by the failed query are reclaimed by the session's
+  * ContextCleaner (`spark.cleaner.referenceTracking.cleanCheckpoints`),
+  * exactly as they would be if the same failure hit the sequential
+  * form.
   */
 object Overlap {
+
+  /** How long an aborting [[par2]] waits for the surviving chain: its
+    * next job fails at submission, so it normally unwinds at once; the
+    * bound only covers a chain stuck in driver-side work.
+    */
+  private[operators] val SiblingWait =
+    scala.concurrent.duration.FiniteDuration(5, "s")
 
   /** Run two independent chain thunks concurrently; returns both
     * results. Each thunk runs on its own thread with the job group set
@@ -41,9 +51,12 @@ object Overlap {
         interruptOnCancel = true)
       try f() finally sc.clearJobGroup()
     }
-    try Await.result(wrap(fa).zip(wrap(fb)), Duration.Inf)
+    val (a, b) = (wrap(fa), wrap(fb))
+    try Await.result(a.zip(b), Duration.Inf)
     catch { case e: Throwable =>
-      scala.util.Try(sess.sparkContext.cancelJobGroup(group))
+      scala.util.Try(sess.sparkContext.cancelJobGroupAndFutureJobs(group))
+      val deadline = SiblingWait.fromNow
+      for (f <- Seq(a, b)) scala.util.Try(Await.ready(f, deadline.timeLeft))
       throw e
     } finally pool.shutdown()
   }

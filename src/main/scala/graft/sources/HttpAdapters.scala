@@ -121,12 +121,4 @@ object HttpAdapters {
       .asNondeterministic()
     (c: Column) => f(c)
   }
-
-  def headOkUdf(perSecond: Double, timeoutSec: Int = 8): Column => Column = {
-    val f = udf((url: String) =>
-      if (url == null) false
-      else headOk(url, timeoutSec, limiterFor("headOk", perSecond)))
-      .asNondeterministic()
-    (c: Column) => f(c)
-  }
 }

@@ -39,11 +39,4 @@ private[streaming] object StreamingBatchDirs {
       })
       .sorted
   }
-
-  /** Delete one `batch=<id>` partition dir (takedown reconciliation). */
-  def deletePartition(spark: SparkSession, dir: String, id: Long): Unit = {
-    val p = new Path(s"$dir/batch=$id")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
 }

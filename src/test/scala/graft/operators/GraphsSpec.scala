@@ -51,13 +51,63 @@ class GraphsSpec extends SparkSpec {
     (1L, 3L, 2.0), (2L, 3L, 1.0), (2L, 5L, 1.0),
     (3L, 1L, 1.0), (4L, 1L, 1.0)) // node 5: dangling (no out-edges)
 
-  test("matches the plain-Scala reference on a dangling multi-edge graph") {
-    val got = Graphs.pageRank(edges.toDF("src", "dst", "w"), "src", "dst", "w",
-        iters = 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val want = ref(edges, 5)
-    assert(got.keySet === want.keySet)
-    for ((v, r) <- want) assert(got(v) === r, s"node $v")
+  /** q102's shape: a near-dup cluster is a clique whose edges run both
+    * ways, weighted by an asymmetric similarity — no dangling node and
+    * no node without in-edges.
+    */
+  private val clique = {
+    val jac = Seq((10L, 11L, 0.5), (10L, 12L, 0.45), (10L, 13L, 0.8),
+      (11L, 12L, 0.6), (11L, 13L, 0.4), (12L, 13L, 0.714286))
+    jac ++ jac.map { case (a, b, w) => (b, a, w) }
+  }
+
+  for ((shape, es, iters) <- Seq(
+      ("a dangling multi-edge graph", edges, 5),
+      ("a symmetric weighted clique", clique, 3)))
+    test(s"matches the plain-Scala reference on $shape") {
+      val got = Graphs.pageRank(es.toDF("src", "dst", "w"), "src", "dst", "w",
+          iters = iters)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val want = ref(es, iters)
+      assert(got.keySet === want.keySet)
+      for ((v, r) <- want) assert(got(v) === r, s"node $v")
+    }
+
+  test("an empty edge list yields an empty (node, rank) frame") {
+    val got = Graphs.pageRank(Seq.empty[(Long, Long, Double)]
+      .toDF("src", "dst", "w"), "src", "dst", "w", iters = 3)
+    assert(got.columns.toSeq === Seq("node", "rank"))
+    assert(got.collect().isEmpty)
+  }
+
+  test("no iteration plan joins by nested loop or cartesian product") {
+    // the scalars (n, dangling mass) must enter as literals; a one-row
+    // broadcast aggregate attached by crossJoin plans as a nested loop
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
+        plans.add(qe.executedPlan.toString); ()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      for (es <- Seq(edges, clique))
+        Graphs.pageRank(es.toDF("src", "dst", "w"), "src", "dst", "w",
+          iters = 3).collect()
+      org.apache.spark.GraftListenerTestHook.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = plans.asScala.toSeq
+    // per run: the edge pin, the node pin, three round pins, the collect
+    assert(seen.size >= 2 * 6, s"expected every pin's plan, saw ${seen.size}")
+    for (p <- seen) {
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"nested loop join:\n$p")
+      assert(!p.contains("CartesianProduct"), s"cartesian product:\n$p")
+    }
   }
 
   test("rank mass stays ~1 despite per-term rounding") {
